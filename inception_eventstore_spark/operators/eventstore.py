@@ -17,6 +17,14 @@ Physical design for 100 TB:
   additionally anti-joins against keys already on disk (bucket- and
   ts-pruned) so at-least-once redelivery never stores duplicates —
   matching the reference's idempotent PK upsert (SURVEY §4).
+- the write path pays per batch, not per stored file: the idempotence
+  checks probe for existing data with ``fsutil.has_data`` (first hit
+  wins) instead of a full listing, and the (et, pid) index append
+  spreads over ``defaultParallelism`` tasks — one file per (et, pid)
+  per append, written in parallel rather than by one coalesced task.
+- ``optimize_buckets`` rewrites every fragmented bucket in ONE job
+  (one listing finds them; a write to one temp directory is swapped in
+  bucket by bucket), not one job per bucket.
 """
 
 from __future__ import annotations
@@ -136,7 +144,7 @@ class EventStore:
             self.spark, path, ["id", "rev", "pos"], n_buckets
         )
         existing = self.events_df()
-        if fsutil.list_data_files(self.spark, path, recursive=True):
+        if fsutil.has_data(self.spark, path):
             indexed = self.spark.read.parquet(path).select(
                 "id", "rev", "pos"
             )
@@ -243,8 +251,7 @@ class EventStore:
         pruning — the batch touches a handful of day partitions)."""
         from inception_eventstore_spark.sources import fsutil
 
-        if not fsutil.list_data_files(self.spark, self.layout.index_path,
-                                      recursive=True):
+        if not fsutil.has_data(self.spark, self.layout.index_path):
             return index_rows
         keys = index_rows.select("et", "pid").distinct().collect()
         if not keys:
@@ -271,8 +278,7 @@ class EventStore:
         """
         from inception_eventstore_spark.sources import fsutil
 
-        if not fsutil.list_data_files(self.spark, self.layout.events_path,
-                                      recursive=True):
+        if not fsutil.has_data(self.spark, self.layout.events_path):
             return rows
         stats = rows.select(
             F.min("ts").alias("lo"),
@@ -337,9 +343,16 @@ class EventStore:
             index_rows = index_rows.localCheckpoint(eager=True)
         index_rows = index_rows.persist()
         try:
+            # An explicit partition count keeps AQE from coalescing the
+            # small shuffle into one task that writes every day file in
+            # turn; each (et, pid) still hashes to one task, so one file
+            # per (et, pid). The (et, pid, ts) sort satisfies the planned
+            # write's own (et, pid) ordering, so ts order survives into
+            # each file (a bare ts sort would be replaced by it).
+            n = self.spark.sparkContext.defaultParallelism
             (
-                index_rows.repartition("et", "pid")
-                .sortWithinPartitions("ts")
+                index_rows.repartition(n, "et", "pid")
+                .sortWithinPartitions("et", "pid", "ts")
                 .write.mode("append")
                 .partitionBy("et", "pid")
                 .parquet(self.layout.index_path)
@@ -577,38 +590,59 @@ class EventStore:
         target_file_bytes: int = 128 * 1024 * 1024,
     ) -> list[int]:
         """Selective small-file compaction: rewrite ONLY buckets whose
-        data-file count exceeds ``max_files_per_bucket``, each into
-        ceil(bytes / target_file_bytes) sorted files. Hot buckets (the
-        ones appends fragment) are found from a driver-side metadata
-        listing — cold buckets are never read or written, so the cost
-        scales with the fragmented fraction, not the table. Rows are
-        rewritten verbatim (tombstones keep filtering at read time;
-        ``compact()`` folds them), so the pass is purely a layout
-        change. Returns the bucket ids rewritten."""
+        data-file count exceeds ``max_files_per_bucket``, each into at
+        most ceil(bytes / target_file_bytes) files sorted by
+        (id, rev, pos). Hot buckets (the ones appends fragment) are
+        found from ONE driver-side listing of the events directory —
+        cold buckets are never read or written, so the cost scales with
+        the fragmented fraction, not the table.
+
+        All hot buckets are rewritten by one job: the pruned scan is
+        shuffled on (bucket, xxhash64(id) mod n_out[bucket]) — an
+        aggregate's rows stay in one file — and written partitioned by
+        bucket to one temp directory, whose bucket directories are then
+        swapped in one by one. Rows are copied verbatim (tombstones
+        keep filtering at read time; ``compact()`` folds them), so the
+        pass is purely a layout change. Returns the bucket ids
+        rewritten."""
         from inception_eventstore_spark.sources import fsutil
 
-        compacted: list[int] = []
-        for b in range(self.layout.n_buckets):
-            bpath = os.path.join(self.layout.events_path, f"bucket={b}")
-            n_files = fsutil.data_file_count(self.spark, bpath)
-            if n_files <= max_files_per_bucket:
-                continue
-            n_out = max(
-                1,
-                -(-fsutil.dir_data_bytes(self.spark, bpath)
-                  // target_file_bytes),
+        per_bucket = _files_per_bucket(
+            fsutil.data_file_sizes(self.spark, self.layout.events_path)
+        )
+        n_out = {
+            b: max(1, -(-n_bytes // target_file_bytes))
+            for b, (n_files, n_bytes) in sorted(per_bucket.items())
+            if n_files > max_files_per_bucket
+        }
+        if not n_out:
+            return []
+        hot = list(n_out)
+        sub = F.pmod(
+            F.xxhash64("id"),
+            F.element_at(
+                F.create_map(*[F.lit(v) for b in hot for v in (b, n_out[b])]),
+                F.col("bucket"),
+            ),
+        )
+        tmp = self.layout.events_path + ".optimize"
+        (
+            self.layout.read_events(self.spark)
+            .where(F.col("bucket").isin(hot))
+            .repartition(sum(n_out.values()), "bucket", sub)
+            .sortWithinPartitions("bucket", "id", "rev", "pos")
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(tmp)
+        )
+        for b in hot:
+            fsutil.replace_dir(
+                self.spark,
+                os.path.join(tmp, f"bucket={b}"),
+                os.path.join(self.layout.events_path, f"bucket={b}"),
             )
-            rows = self.spark.read.schema(schemas.EVENTS_SCHEMA).parquet(bpath)
-            tmp = bpath + ".compact"
-            (
-                rows.coalesce(int(n_out))
-                .sortWithinPartitions("id", "rev", "pos")
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-            fsutil.replace_dir(self.spark, tmp, bpath)
-            compacted.append(b)
-        return compacted
+        fsutil.delete_path(self.spark, tmp)
+        return hot
 
     def compact(self) -> None:
         """Fold tombstones into the base files (one rewrite job)."""
@@ -644,13 +678,10 @@ class EventStore:
         from inception_eventstore_spark.sources import fsutil
 
         tomb_path = os.path.join(self.layout.root, "tombstones")
-        out = {
-            "events_files": fsutil.data_file_count(
-                self.spark, self.layout.events_path
-            ),
-            "events_bytes": fsutil.dir_data_bytes(
-                self.spark, self.layout.events_path
-            ),
+        sizes = fsutil.data_file_sizes(self.spark, self.layout.events_path)
+        return {
+            "events_files": len(sizes),
+            "events_bytes": sum(sizes.values()),
             "tombstone_files": fsutil.data_file_count(self.spark, tomb_path),
             "index_files": fsutil.data_file_count(
                 self.spark, self.layout.index_path
@@ -658,17 +689,11 @@ class EventStore:
             "counter_files": fsutil.data_file_count(
                 self.spark, self.layout.counter_path
             ),
+            "fragmented_buckets": sum(
+                1 for n_files, _ in _files_per_bucket(sizes).values()
+                if n_files > 8
+            ),
         }
-        out["fragmented_buckets"] = sum(
-            1
-            for b in range(self.layout.n_buckets)
-            if fsutil.data_file_count(
-                self.spark,
-                os.path.join(self.layout.events_path, f"bucket={b}"),
-            )
-            > 8
-        )
-        return out
 
     # ------------------------------------------------------------------
     # Replay surface
@@ -867,6 +892,19 @@ class EventStore:
         return self.events_df().withColumn(
             "ts_dt", filetime_to_timestamp_col("ts")
         )
+
+
+def _files_per_bucket(sizes: dict[str, int]) -> dict[int, tuple[int, int]]:
+    """bucket → (data files, bytes) from an events-directory listing
+    keyed by relative path (``bucket=<b>/<file>``)."""
+    out: dict[int, tuple[int, int]] = {}
+    for rel, n_bytes in sizes.items():
+        head = rel.split("/", 1)[0]
+        if head.startswith("bucket="):
+            b = int(head[len("bucket="):])
+            n_files, total = out.get(b, (0, 0))
+            out[b] = (n_files + 1, total + n_bytes)
+    return out
 
 
 # Imported at the bottom to avoid a cycle: index.py imports nothing from

@@ -40,11 +40,11 @@ class IndexByEventTypeStore:
     def index_df(self) -> DataFrame:
         if not self._exists():
             return self.spark.createDataFrame([], schema=schemas.INDEX_SCHEMA)
-        df = self.spark.read.parquet(self.layout.index_path)
-        # Partition-dir columns come back last and pid as int; reorder to
-        # the canonical envelope.
-        return df.select(
-            "et", F.col("pid").cast("int").alias("pid"), "aid", "rev", "pos", "ts"
+        # The declared schema spares a footer schema-inference job per
+        # read; partition-dir columns come back last, so reorder to the
+        # canonical envelope.
+        return self.layout.read_index(self.spark).select(
+            *schemas.INDEX_SCHEMA.fieldNames()
         )
 
     # ------------------------------------------------------------------
@@ -57,7 +57,9 @@ class IndexByEventTypeStore:
             rows.select("et", "pid", "aid", "rev", "pos", "ts")
             .dropDuplicates(["et", "pid", "aid", "rev", "pos"])
             .repartition("et", "pid")
-            .sortWithinPartitions("ts")
+            # (et, pid, ts): a bare ts sort would be replaced by the
+            # planned write's own (et, pid) sort
+            .sortWithinPartitions("et", "pid", "ts")
             .write.mode("append")
             .partitionBy("et", "pid")
             .parquet(self.layout.index_path)

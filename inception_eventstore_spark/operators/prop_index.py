@@ -172,9 +172,7 @@ class PropertyIndex:
         b = self._bucket_of(value)
         bucket_dir = f"{self.path}/_vb={b}"
         if not fsutil.path_exists(self.spark, bucket_dir):
-            if not fsutil.list_data_files(
-                self.spark, self.path, recursive=True
-            ):
+            if not fsutil.has_data(self.spark, self.path):
                 raise FileNotFoundError(
                     f"property index has no data: {self.path}"
                 )

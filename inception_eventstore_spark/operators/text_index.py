@@ -75,9 +75,14 @@ class MinHashTextIndex:
         return self.path + "/meta"
 
     # -- derivation (shared by build/append/query: identical hash family)
-    def _derive(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    def _derive(self, docs: DataFrame,
+                persist: bool = True) -> tuple[DataFrame, DataFrame]:
+        """(shingle sets, band buckets) of ``docs``; with ``persist`` the
+        caller must ``unpersist`` the sets once both are consumed."""
         m = self.meta
-        sets = shingle_sets(docs, m.id_col, m.text_col, m.shingle_k).persist()
+        sets = shingle_sets(docs, m.id_col, m.text_col, m.shingle_k)
+        if persist:
+            sets = sets.persist()
         sigs = minhash_signatures(sets, m.num_hashes, n_bases=m.rows_per_band)
         buckets = band_hashes(sigs, m.bands, m.rows_per_band)
         return sets, buckets
@@ -134,8 +139,14 @@ class MinHashTextIndex:
     def query(self, docs: DataFrame, threshold: float = 0.8) -> DataFrame:
         """Near-dup matches of a NEW batch against the indexed corpus:
         (query_id, match_id, jaccard) with jaccard ≥ threshold, computed
-        exactly over the stored shingle sets of candidates only."""
-        new_sets, new_buckets = self._derive(docs)
+        exactly over the stored shingle sets of candidates only.
+
+        The result is lazy, so nothing here is cached: a persisted
+        batch would have no owner left to release it."""
+        return self._probe(*self._derive(docs, persist=False), threshold)
+
+    def _probe(self, new_sets: DataFrame, new_buckets: DataFrame,
+               threshold: float) -> DataFrame:
         stored_buckets = self.spark.read.parquet(self._buckets_path())
         cand = (
             new_buckets.select("_band", "_bh", F.col("_id").alias("query_id"))
@@ -175,12 +186,16 @@ class MinHashTextIndex:
         The matched id set is materialized BEFORE the append so the
         probe cannot see the batch's own rows."""
         m = self.meta
-        dup_ids = (
-            self.query(docs, threshold)
-            .select(F.col("query_id").alias(m.id_col))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        sets, buckets = self._derive(docs)
+        try:
+            dup_ids = (
+                self._probe(sets, buckets, threshold)
+                .select(F.col("query_id").alias(m.id_col))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            sets.unpersist()
         unique = docs.join(dup_ids, m.id_col, "left_anti")
         self.append(unique)
         return unique

@@ -64,7 +64,7 @@ def export_shards(
         out = out.repartition(int(n_shards), "shard")
     out.write.mode("overwrite").partitionBy("shard").parquet(path)
 
-    if not fsutil.list_data_files(df.sparkSession, path, recursive=True):
+    if not fsutil.has_data(df.sparkSession, path):
         # every row was filtered upstream: an empty-shard-set manifest
         # (a valid, verifiable state) beats the obscure parquet
         # schema-inference crash a blind re-read would raise
@@ -146,7 +146,7 @@ def verify_shards(spark: SparkSession, path: str) -> bool:
     and compare with the manifest. Returns True iff everything matches
     (raises on a missing manifest)."""
     m = read_manifest(spark, path)
-    if not fsutil.list_data_files(spark, path, recursive=True):
+    if not fsutil.has_data(spark, path):
         # no data on disk: matches only an empty-shard-set manifest
         return not m["shards"]
     written = spark.read.option("basePath", path).parquet(path)

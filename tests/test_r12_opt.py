@@ -196,6 +196,24 @@ class TestNoCacheManagerResidue:
         connected_components(pairs, driver_finish_edges=0).collect()
         assert _cache_empty(spark)
 
+    def test_text_index_query_and_append_unique_release_cache(
+        self, spark, tmp_path
+    ):
+        from inception_eventstore_spark.operators.text_index import (
+            MinHashTextIndex,
+        )
+
+        docs = self._docs(spark)
+        idx = MinHashTextIndex.build(
+            docs.where("doc_id < 30"), str(tmp_path / "tidx")
+        )
+        spark.catalog.clearCache()
+        assert idx.query(docs.where("doc_id >= 30")).count() > 0
+        assert _cache_empty(spark)
+        unique = idx.append_unique(docs.where("doc_id >= 30"))
+        unique.collect()
+        assert _cache_empty(spark)
+
 
 class TestQualityCorrelationsLocalFinish:
     def test_three_rows_single_n(self, spark):
