@@ -24,6 +24,12 @@ and letting identical rebuilt plans silently read a previous run's
 cache). Side effect of the discipline: these operators EXECUTE at
 call time; compose filters on the returned pair report (pair-sized),
 not on the plan.
+
+Driver cost: under PySpark 4.1 call-site capture every ``F.*``/Column
+call costs about 13 py4j round trips, so an expression family generated
+in a loop (the shingle chain, the MinHash mins, the band hashes) is
+built as ONE SQL string the JVM parses in one call — the same Catalyst
+expressions for about 1% of the round trips.
 """
 
 from __future__ import annotations
@@ -99,6 +105,14 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     )
 
 
+#: ``tokens`` of a staged ``_txt`` column as SQL; the separators are raw
+#: characters, so ``spark.sql.parser.escapedStringLiterals`` can't alter it.
+_TOKENS_SQL = (
+    "filter(split(translate(lower(_txt), '\t\n\x0b\f\r', '     '), ' '), "
+    "t -> t != '')"
+)
+
+
 def shingle_sets(docs: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", k: int = 3) -> DataFrame:
     """(_id, _sh) where _sh = distinct k-word shingles hashed to LONG —
@@ -110,30 +124,27 @@ def shingle_sets(docs: DataFrame, id_col: str = "doc_id",
     string-concat formulation was ~20× more expensive in codegen)."""
     from inception_eventstore_spark.functions.spread import spread
 
-    docs = spread(docs)
-    toks = tokens(text_col)
-    h = F.transform(toks, lambda t: F.xxhash64(t))
-    n = F.size(h)
+    h = f"transform({_TOKENS_SQL}, t -> xxhash64(t))"
+    n = f"size({h})"
     # Chained zip_with over shifted slices: element i of the final array
     # is the hash chain of h[i..i+k-1]. O(k·n) per row — element_at on a
     # non-materialized array expression re-evaluates it per access
     # (O(n²), ~15× slower at k=3, doc≈100 tokens).
     chain = h
     for j in range(1, k):
-        chain = F.zip_with(
-            chain,
-            F.slice(h, j + 1, F.greatest(n - j, F.lit(0))),
-            lambda a, b: F.xxhash64(a, b),
-        )
+        chain = (f"zip_with({chain}, slice({h}, {j + 1}, greatest({n} - {j}, 0)), "
+                 "(a, b) -> xxhash64(a, b))")
     # positions past n-k+1 chain in nulls (xxhash64 skips them) — trim,
     # keeping at least one shingle so short docs (< k tokens) survive.
-    trimmed = F.slice(chain, 1, F.greatest(n - F.lit(k - 1), F.lit(1)))
-    sh = F.when(n == 0, F.array().cast("array<bigint>")).otherwise(
-        F.array_distinct(trimmed)
+    sh = (f"CASE WHEN {n} = 0 THEN CAST(array() AS array<bigint>) ELSE "
+          f"array_distinct(slice({chain}, 1, greatest({n} - {k - 1}, 1))) END")
+    return (
+        spread(docs)
+        .select(id_col, text_col)  # resolved as F.col resolves them
+        .toDF("_id", "_txt")
+        .selectExpr("_id", f"{sh} AS _sh")
+        .where("size(_sh) > 0")
     )
-    return docs.select(
-        F.col(id_col).alias("_id"), sh.alias("_sh")
-    ).where(F.size("_sh") > 0)
 
 
 def minhash_signatures(sets: DataFrame, num_hashes: int = 64,
@@ -141,7 +152,7 @@ def minhash_signatures(sets: DataFrame, num_hashes: int = 64,
     """(_id, _sig ARRAY<LONG>[num_hashes]) from (_id, _sh ARRAY<LONG>).
 
     Shape: explode the shingle hashes, then ONE vectorized hash-agg
-    with ``num_hashes`` MIN columns. Partial aggregation combines
+    into an array of ``num_hashes`` MINs. Partial aggregation combines
     map-side, so the shuffle carries num_hashes longs per doc.
 
     Hash family: ``n_bases`` independent rehashes per element
@@ -179,25 +190,22 @@ def minhash_signatures(sets: DataFrame, num_hashes: int = 64,
             f"{num_hashes // n_bases} rotations per base; only 64 distinct "
             "rotations exist — raise n_bases"
         )
-    ex = sets.select("_id", F.explode("_sh").alias("_h"))
-    bases = [F.xxhash64(F.lit(r), F.col("_h")) for r in range(n_bases)]
     step = max(1, (64 * n_bases) // num_hashes)
 
-    def rol(c, amount):
+    def rol(c: str, amount: int) -> str:
         amount %= 64
         if amount == 0:
             return c
-        return F.shiftleft(c, amount).bitwiseOR(
-            F.shiftrightunsigned(c, 64 - amount)
-        )
+        return f"(shiftleft({c}, {amount}) | shiftrightunsigned({c}, {64 - amount}))"
 
-    aggs = [
-        F.min(rol(bases[i % n_bases], step * (i // n_bases))).alias(f"_m{i}")
+    mins = ", ".join(
+        f"min({rol(f'xxhash64({i % n_bases}, _h)', step * (i // n_bases))})"
         for i in range(num_hashes)
-    ]
-    mins = ex.groupBy("_id").agg(*aggs)
-    return mins.select(
-        "_id", F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("_sig")
+    )
+    return (
+        sets.selectExpr("_id", "explode(_sh) AS _h")
+        .groupBy("_id")
+        .agg(F.expr(f"array({mins}) AS _sig"))
     )
 
 
@@ -209,23 +217,21 @@ def band_hashes(signatures: DataFrame, bands: int,
     the persisted text index (text_index.MinHashTextIndex) — both sides
     MUST use identical (num_hashes, bands, n_bases) for buckets to
     collide."""
-    return signatures.select(
-        "_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        *[
-                            F.col("_sig").getItem(b * rows_per_band + r)
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_band", "_bh"),
+    per_band = ", ".join(
+        f"xxhash64({b}, "
+        + ", ".join(f"_sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        + ")"
+        for b in range(bands)
     )
+    return signatures.selectExpr(
+        "_id", f"posexplode(array({per_band})) AS (_band, _bh)"
+    )
+
+
+def set_jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard |A∩B| / |A∪B| of two hashed-set columns."""
+    inter = f"CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
+    return F.expr(f"{inter} / (CAST(size({a}) + size({b}) AS DOUBLE) - {inter})")
 
 
 def minhash_lsh_pairs(
@@ -279,24 +285,20 @@ def minhash_lsh_pairs(
     banded = cap_hot_buckets(
         banded0, ["_band", "_bh"], max_bucket, "minhash_lsh_pairs"
     )
-    left = banded.select("_band", "_bh", F.col("_id").alias("id_a"))
-    right = banded.select("_band", "_bh", F.col("_id").alias("id_b"))
+    left = banded.selectExpr("_band", "_bh", "_id AS id_a")
+    right = banded.selectExpr("_band", "_bh", "_id AS id_b")
     cand = (
         left.join(right, ["_band", "_bh"])
-        .where(F.col("id_a") < F.col("id_b"))
+        .where("id_a < id_b")
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    full_a = sets.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
-    full_b = sets.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - F.size(
-        F.array_intersect("sh_a", "sh_b")
-    ).cast("double")
+    full_a = sets.selectExpr("_id AS id_a", "_sh AS sh_a")
+    full_b = sets.selectExpr("_id AS id_b", "_sh AS sh_b")
     out = (
         cand.join(full_a, "id_a")
         .join(full_b, "id_b")
-        .withColumn("jaccard", inter / union)
+        .withColumn("jaccard", set_jaccard("sh_a", "sh_b"))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -522,14 +524,10 @@ def ngram_jaccard_pairs(
     )
     full_a = sets.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"))
     full_b = sets.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - F.size(
-        F.array_intersect("sh_a", "sh_b")
-    ).cast("double")
     out = (
         cand.join(full_a, "id_a")
         .join(full_b, "id_b")
-        .withColumn("jaccard", inter / union)
+        .withColumn("jaccard", set_jaccard("sh_a", "sh_b"))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )

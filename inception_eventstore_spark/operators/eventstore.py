@@ -256,10 +256,11 @@ class EventStore:
         keys = index_rows.select("et", "pid").distinct().collect()
         if not keys:
             return index_rows
+        # one literal per distinct value (key=str: et may be None)
         existing = (
             self.layout.read_index(self.spark)
-            .where(F.col("et").isin([k["et"] for k in keys]))
-            .where(F.col("pid").isin([k["pid"] for k in keys]))
+            .where(F.col("et").isin(sorted({k["et"] for k in keys}, key=str)))
+            .where(F.col("pid").isin(sorted({k["pid"] for k in keys})))
             .select("aid", "rev", "pos")
         )
         return index_rows.join(existing, ["aid", "rev", "pos"], "left_anti")

@@ -14,8 +14,9 @@ log — IndexByEventTypeStore.cs:44-61) to text dedup:
   band hashes against the stored buckets (shuffle payload = 16 bytes ×
   bands per new doc), and verifies survivors with exact Jaccard over
   the stored shingle sets;
-- ``append_unique`` is the dedup-at-ingest flow: probe, then index only
-  the documents that matched nothing.
+- ``append_unique`` is the dedup-at-ingest flow: the batch's sets and
+  buckets are derived once, probed, and the rows of the documents that
+  matched nothing are appended.
 
 Cost per ingested batch at 100 TB corpus: |batch|·bands bucket rows
 joined against the bucket table (hash join on 8-byte keys) + shingle
@@ -39,6 +40,7 @@ from pyspark.sql import functions as F
 from inception_eventstore_spark.operators.dedup import (
     band_hashes,
     minhash_signatures,
+    set_jaccard,
     shingle_sets,
 )
 
@@ -87,6 +89,10 @@ class MinHashTextIndex:
         buckets = band_hashes(sigs, m.bands, m.rows_per_band)
         return sets, buckets
 
+    def _write(self, sets: DataFrame, buckets: DataFrame, mode: str) -> None:
+        sets.write.mode(mode).parquet(self._sets_path())
+        buckets.write.mode(mode).parquet(self._buckets_path())
+
     # -- build / load / append
     @classmethod
     def build(
@@ -106,8 +112,7 @@ class MinHashTextIndex:
         meta = TextIndexMeta(num_hashes, bands, shingle_k, id_col, text_col)
         idx = cls(docs.sparkSession, path, meta)
         sets, buckets = idx._derive(docs)
-        sets.write.mode("overwrite").parquet(idx._sets_path())
-        buckets.write.mode("overwrite").parquet(idx._buckets_path())
+        idx._write(sets, buckets, "overwrite")
         (
             docs.sparkSession.createDataFrame([(json.dumps(asdict(meta)),)],
                                               "v string")
@@ -131,8 +136,7 @@ class MinHashTextIndex:
         """Index a new batch with the index's recorded hash family —
         no rebuild; subsequent probes see the new documents."""
         sets, buckets = self._derive(docs)
-        sets.write.mode("append").parquet(self._sets_path())
-        buckets.write.mode("append").parquet(self._buckets_path())
+        self._write(sets, buckets, "append")
         sets.unpersist()
 
     # -- probe
@@ -142,38 +146,30 @@ class MinHashTextIndex:
         exactly over the stored shingle sets of candidates only.
 
         The result is lazy, so nothing here is cached: a persisted
-        batch would have no owner left to release it."""
+        batch would have no owner left to release it. The batch's id
+        column must have the indexed type (stored rows read with its schema)."""
         return self._probe(*self._derive(docs, persist=False), threshold)
 
     def _probe(self, new_sets: DataFrame, new_buckets: DataFrame,
                threshold: float) -> DataFrame:
-        stored_buckets = self.spark.read.parquet(self._buckets_path())
+        # the batch's schemas: no footer-inference job per stored table
+        stored_buckets = self.spark.read.schema(new_buckets.schema).parquet(
+            self._buckets_path())
         cand = (
-            new_buckets.select("_band", "_bh", F.col("_id").alias("query_id"))
-            .join(
-                stored_buckets.select(
-                    "_band", "_bh", F.col("_id").alias("match_id")
-                ),
-                ["_band", "_bh"],
-            )
+            new_buckets.selectExpr("_band", "_bh", "_id AS query_id")
+            .join(stored_buckets.selectExpr("_band", "_bh", "_id AS match_id"),
+                  ["_band", "_bh"])
             .select("query_id", "match_id")
             .dropDuplicates(["query_id", "match_id"])
         )
-        stored_sets = self.spark.read.parquet(self._sets_path())
-        qa = new_sets.select(F.col("_id").alias("query_id"),
-                             F.col("_sh").alias("sh_q"))
-        ma = stored_sets.select(F.col("_id").alias("match_id"),
-                                F.col("_sh").alias("sh_m"))
-        inter = F.size(F.array_intersect("sh_q", "sh_m")).cast("double")
-        union = (
-            F.size("sh_q") + F.size("sh_m")
-        ).cast("double") - F.size(F.array_intersect("sh_q", "sh_m")).cast(
-            "double"
-        )
+        stored_sets = self.spark.read.schema(new_sets.schema).parquet(
+            self._sets_path())
         return (
-            cand.join(qa, "query_id")
-            .join(ma, "match_id")
-            .withColumn("jaccard", inter / union)
+            cand.join(new_sets.selectExpr("_id AS query_id", "_sh AS sh_q"),
+                      "query_id")
+            .join(stored_sets.selectExpr("_id AS match_id", "_sh AS sh_m"),
+                  "match_id")
+            .withColumn("jaccard", set_jaccard("sh_q", "sh_m"))
             .where(F.col("jaccard") >= threshold)
             .select("query_id", "match_id", "jaccard")
         )
@@ -183,19 +179,23 @@ class MinHashTextIndex:
         """Dedup-at-ingest: index only the documents that match nothing
         already indexed; returns the appended (unique) documents.
 
-        The matched id set is materialized BEFORE the append so the
-        probe cannot see the batch's own rows."""
-        m = self.meta
+        The batch is derived once: its sets and buckets are persisted,
+        probed, and the rows of unmatched documents appended. The
+        matched id set is materialized BEFORE the append so the probe
+        cannot see the batch's own rows."""
         sets, buckets = self._derive(docs)
+        buckets = buckets.persist()  # read by the probe and the append
         try:
             dup_ids = (
                 self._probe(sets, buckets, threshold)
-                .select(F.col("query_id").alias(m.id_col))
+                .selectExpr("query_id AS _id")
                 .distinct()
                 .localCheckpoint(eager=True)
             )
+            self._write(sets.join(dup_ids, "_id", "left_anti"),
+                        buckets.join(dup_ids, "_id", "left_anti"), "append")
         finally:
             sets.unpersist()
-        unique = docs.join(dup_ids, m.id_col, "left_anti")
-        self.append(unique)
-        return unique
+            buckets.unpersist()
+        return docs.join(dup_ids.withColumnRenamed("_id", self.meta.id_col),
+                         self.meta.id_col, "left_anti")
